@@ -80,9 +80,19 @@ def strip_html(c: ColumnOrName) -> Column:
 
 
 def empty_to_null(c: ColumnOrName) -> Column:
-    """Strip, then empty-string → NULL (schemas.py:144-159)."""
-    t = F.trim(_col(c))
-    return F.when(t == "", F.lit(None).cast("string")).otherwise(t)
+    """Strip, then empty-string → NULL (schemas.py:144-159).
+
+    ``nullif`` names its argument once: Spark binds it through a
+    common-expression node, so a long normalization chain passed in here
+    appears once in the plan. Spelled as a CASE WHEN, the chain would be
+    copied into the condition and the ELSE arm, and constraint inference
+    multiplies such copies through every filter and union above it
+    (seconds of optimizer time on the unify plan). Output-identical to
+    ``CASE WHEN trim(x) = '' THEN NULL ELSE trim(x) END``: ``NULLIF(a,
+    b)`` is defined as exactly that CASE with ``a = trim(x)``, and a NULL
+    ``trim(x)`` yields NULL on both forms.
+    """
+    return F.nullif(F.trim(_col(c)), F.lit(""))
 
 
 # --- F5-F7: Náhuatl rules (normalizers.py:136-153) -------------------------

@@ -28,11 +28,16 @@ from pyspark.sql import DataFrame
 
 
 def _plan_has_exchange(df: DataFrame) -> bool:
-    """True iff df's physical plan contains a shuffle boundary.
+    """True iff df's physical plan contains any Exchange node.
 
     Uses the plan STRING of the (initial) executed plan — computed on
     the driver without running any job; with AQE the string shows the
     initial plan's Exchange nodes before any stage is materialized.
+
+    ``BroadcastExchange`` counts too. That is deliberate and
+    conservative: with AQE a broadcast side is its own query stage, so
+    the partition-count probe could have to run it; a frame that only
+    broadcasts is left unspread rather than risk a hidden job.
     """
     plan = df._jdf.queryExecution().executedPlan().toString()
     return "Exchange" in plan

@@ -126,9 +126,11 @@ def cosine_cols(a, b, dim: int | None = None) -> F.Column:
     construction: the unrolled form performs EXACTLY the fold's
     operation sequence — cast each element to double, left-to-right
     ``(0.0 + x₀·y₀) + x₁·y₁ …`` for the dot and both norms, then
-    ``dot / (na · nb)`` — and ``try_element_at`` yields NULL past the
-    end exactly like ``zip_with``'s null padding, so any row violating
-    the declared dim surfaces as NULL rather than a wrong number.
+    ``dot / (na · nb)``. Any row violating the declared dim surfaces as
+    NULL rather than a wrong number, as it does on the fold (whose
+    ``zip_with`` null-pads the shorter array): the unrolled sum is
+    guarded by ``size(a) = dim AND size(b) = dim``, since it would
+    otherwise read only the first ``dim`` elements of a longer array.
     ``a``/``b`` must be column NAMES when ``dim`` is set."""
     if dim is not None:
         return _cosine_fixed_dim(a, b, dim)
@@ -145,19 +147,29 @@ def _cosine_fixed_dim(a: str, b: str, dim: int) -> F.Column:
     """The fixed-dim unrolled form behind :func:`cosine_cols` — one
     parsed SQL expression, no lambda functions (fastlit lesson: build
     the whole expression server-side in one parse instead of a py4j fan,
-    and keep it inside whole-stage codegen)."""
+    and keep it inside whole-stage codegen).
+
+    The length guard seeds the dot fold: it starts from
+    ``CASE WHEN size(a) = dim AND size(b) = dim THEN 0.0 END``, so a
+    wrong-length row carries NULL through every addition. A CASE around
+    the whole quotient would put the unrolled terms inside a conditional
+    branch, where subexpression elimination does not share the element
+    reads, and the generated method outgrows the JVM's 64 KB limit."""
     if not (isinstance(a, str) and isinstance(b, str)):
         raise TypeError("cosine_cols(dim=...) requires column NAMES")
     ax = [f"CAST(try_element_at({a}, {i}) AS DOUBLE)" for i in range(1, dim + 1)]
     bx = [f"CAST(try_element_at({b}, {i}) AS DOUBLE)" for i in range(1, dim + 1)]
 
-    def fold(terms: list[str]) -> str:
-        acc = "CAST(0.0 AS DOUBLE)"
+    def fold(terms: list[str], acc: str = "CAST(0.0 AS DOUBLE)") -> str:
         for t in terms:
             acc = f"({acc} + {t})"
         return acc
 
-    dot = fold([f"({x} * {y})" for x, y in zip(ax, bx)])
+    guarded_zero = (
+        f"CASE WHEN size({a}) = {dim} AND size({b}) = {dim} "
+        "THEN CAST(0.0 AS DOUBLE) END"
+    )
+    dot = fold([f"({x} * {y})" for x, y in zip(ax, bx)], guarded_zero)
     na = f"SQRT({fold([f'({x} * {x})' for x in ax])})"
     nb = f"SQRT({fold([f'({y} * {y})' for y in bx])})"
     return F.expr(f"({dot} / ({na} * {nb}))")

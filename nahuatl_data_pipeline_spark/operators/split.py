@@ -25,9 +25,15 @@ big the input is) that is broadcast-joined back:
     offset  = cumulative count of earlier buckets (tiny side table)
     rank    = offset + row                        -- identical semantics
 
-No action, no cache, no single-partition exchange on the data path; the
-only serial step is a window over the ≤65k-row counts table. For
+No action and no single-partition exchange on the data path; the only
+serial step is a window over the ≤65k-row counts table. For
 approximate-size splits with zero shuffle at all, ``hash_split``.
+
+No cache either, and that has a cost: the counts table is an aggregate
+of the same input as the ranked rows, and Spark does not reuse the
+shared subtree, so the offsets side re-executes the input's whole plan
+(in ``pipeline.run_corpus_pipeline``: read → normalize → dedup, twice
+each, with no ``ReusedExchange``).
 """
 
 from __future__ import annotations

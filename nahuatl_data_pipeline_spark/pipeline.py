@@ -7,9 +7,21 @@ here the whole run is ONE lazy DataFrame chain
 
     read → coalesce/filter → normalize → window-dedup → split-tag → write
 
-so Catalyst fuses the narrow stages and the only shuffles are the dedup
-window and the split ranking (§3.1 "Spark shape"). Stage counts for run
-metadata come from a single post-write aggregate, not per-stage actions.
+with one write action, and the only shuffles are the dedup window and
+the split ranking (§3.1 "Spark shape"). Stage counts for run metadata
+come from a single post-write aggregate, not per-stage actions.
+
+Known costs of that one plan (ROADMAP direction 2, not yet removed):
+
+- ``seeded_split`` joins the ranked rows to an offsets table derived
+  from the same input, and Spark does not reuse the shared subtree: the
+  offsets side re-executes the whole read → normalize → dedup chain.
+  The executed plan holds 10 ``FileScan json`` (5 scans × 2 sides),
+  0 ``ReusedExchange`` and 16 ``ArrowEvalPython``.
+- The pair and length filters are pushed below the normalization
+  projection, so each union branch evaluates the NFC Arrow UDF once for
+  the filter predicate and again for the projected columns: ``_nfc``
+  runs twice per row on each side.
 """
 
 from __future__ import annotations

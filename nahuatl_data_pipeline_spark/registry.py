@@ -165,6 +165,13 @@ _RECERTIFY_IF_BEFORE: dict[str, int] = {
     # re-certify rather than argue.
     "q171_psl_domain_stats": 14,
     "q174_url_head_psl_survivors": 14,
+    # r15: the fixed-dim unrolled cosine is guarded by size(a) = dim AND
+    # size(b) = dim, so an over-length array scores NULL instead of a
+    # cosine of its first dim elements. The certified embeddings are
+    # all exactly 64 long, but the plan's expression changed.
+    "q24_cosine_topk": 15,
+    "q120_hard_negatives": 15,
+    "q139_margin_topk": 15,
 }
 
 

@@ -39,6 +39,34 @@ def test_empty_to_null(spark):
     assert out == [None, None, "x"]
 
 
+@pytest.mark.parametrize("lang,regexps", [("es", 4), ("nah", 3), ("myn", 2)])
+def test_normalize_text_references_chain_once(spark, lang, regexps):
+    # empty_to_null must not copy its argument: a doubled chain is what
+    # constraint inference multiplies through the unify plan's filters
+    # and union branches (seconds of driver-side optimization)
+    df = spark.range(1).selectExpr("'a' AS s")
+    plan = (
+        df.select(normalize_text(F.col("s"), lang=lang).alias("o"))
+        ._jdf.queryExecution()
+        .analyzed()
+        .toString()
+    )
+    assert plan.count("_nfc(") == 1
+    assert plan.count("regexp_replace(") == regexps
+
+
+def test_empty_to_null_references_argument_once(spark):
+    df = spark.range(1).selectExpr("'a' AS x")
+    top = (
+        df.select(empty_to_null(F.col("x")).alias("o"))
+        ._jdf.queryExecution()
+        .analyzed()
+        .toString()
+        .splitlines()[0]
+    )
+    assert top.count("x#") == 1
+
+
 def test_remove_urls_and_page_artifacts(spark):
     out = apply_fn(spark, remove_urls, ["ver http://x.co/a aquí"])
     assert out == ["ver  aquí"]

@@ -653,3 +653,25 @@ def test_empty_corpus_schema_inherits_id_type(spark):
     assert [f.dataType for f in srp_empty.schema.fields[:2]] == [
         populated.schema["vec_id"].dataType
     ] * 2
+
+
+def test_fixed_dim_cosine_nulls_wrong_length(spark):
+    """The unrolled fixed-dim cosine equals the fold on dim-long arrays
+    and is NULL when either array is longer than dim (it would
+    otherwise score only the first dim elements)."""
+    from nahuatl_data_pipeline_spark.operators.similarity import cosine_cols
+
+    a = [float((i * 7) % 11 - 5) for i in range(64)]
+    b = [float((i * 5) % 13 - 6) for i in range(64)]
+    df = spark.createDataFrame(
+        [(1, a, b), (2, a + [3.0], b), (3, a, b + [3.0]), (4, a + [0.0], b + [0.0])],
+        "id int, a array<double>, b array<double>",
+    )
+    rows = df.select(
+        "id",
+        cosine_cols("a", "b", dim=64).alias("fixed"),
+        cosine_cols("a", "b").alias("fold"),
+    ).orderBy("id").collect()
+    assert rows[0]["fixed"] is not None
+    assert rows[0]["fixed"] == rows[0]["fold"]
+    assert [r["fixed"] for r in rows[1:]] == [None, None, None]
